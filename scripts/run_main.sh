@@ -12,9 +12,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# SPARK_GRAFT_JAVA_OPTS: extra -D flags (e.g. -Dspark.memory.fraction=0.15
-# for the spill rehearsal — SparkSession picks spark.* system properties up
-# in any main without per-main plumbing).
+# SPARK_GRAFT_JAVA_OPTS: extra -D flags, e.g. -Dspark.memory.fraction=0.15
+# for a spill rehearsal with graft.Probe — SparkSession picks up spark.*
+# system properties the graft.Session factory does not set itself.
 # ReservedCodeCacheSize: the default 240 MB JIT code cache FILLS after
 # ~200 bench keys of whole-stage codegen; UseCodeCacheFlushing then
 # evicts hot methods and late-alphabet keys run ~2-3x slow from

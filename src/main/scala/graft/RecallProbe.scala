@@ -19,13 +19,7 @@ object RecallProbe {
     val tiers =
       if (args.length > 1) args(1).split(",").toSeq
       else Seq("nndescent", "graph_search", "hnsw", "ivfpq")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("probe_id", "cand_id").collect()

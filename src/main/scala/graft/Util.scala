@@ -26,10 +26,11 @@ object Util {
       .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   /** Full JSON string escaping (backslash, quote, ALL control chars) —
-    * any free text spliced into a machine-parsed single-line JSON
-    * record (Bench's error map, SpillRehearsal's per-key error) must
-    * pass through here: a raw newline or quote from an exception
-    * message would split/break the one line the driver parses. */
+    * any free text spliced into a machine-parsed JSON record (Bench's
+    * error map, Verify's oracle SQL and manifest) must pass through
+    * here: a raw newline or quote from an exception message or a tab in
+    * hand-written oracle SQL would split the one line Bench emits or make
+    * the oracle compare's json.load fail. */
   def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -46,7 +46,7 @@ object Graph {
   // conserved and no dangling-node term is needed.
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // PLAN-LEAF entry (r19, measured with KeyProbe): the warm key spent
+    // PLAN-LEAF entry (r19, probed per job): the warm key spent
     // 1.1 s of a 1.7 s pass in DRIVER planning — every reference to the
     // pair frame re-analyzed and re-canonicalized the whole LSH subtree
     // (32 minhash aggregates + self-join + verify joins) against the

@@ -461,13 +461,15 @@ object Similarity {
   // DROPPED dimensions >= 1024 on the inner join for wider models
   // (1536/3072-dim). One bounded 1-row driver scalar (max array size)
   // per dir derives the true bound; like the r19 corpus-count memo it
-  // caches metadata, never data.
+  // caches metadata, never data. An empty (or all-null) table has no
+  // max: 0 dims, an empty sign table and an empty result, not an NPE.
   private val rpDimsMemo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private def rpDims(spark: SparkSession, dir: String): Long =
+  private[operators] def rpDims(spark: SparkSession, dir: String): Long =
     rpDimsMemo.getOrElseUpdate((spark, dir),
       Tables.embeddings(spark, dir)
-        .select(max(size(col("embedding")))).head().getInt(0).toLong)
+        .select(coalesce(max(size(col("embedding"))), lit(0)))
+        .head().getInt(0).toLong)
 
   def embedRp(spark: SparkSession, dir: String): DataFrame = {
     // s(i,j): -1 iff the first hex digit of md5("i:j") is odd — the
@@ -1457,7 +1459,7 @@ object Similarity {
   private[operators] def searchAdj(spark: SparkSession,
       dir: String): DataFrame =
     // Served as a memoized CHECKPOINT LEAF per dir (r19, the
-    // Dedup.pairsLeaf rationale measured on this tier with KeyProbe):
+    // Dedup.pairsLeaf rationale probed per job on this tier):
     // every hop of every graph-search key referenced this frame's full
     // logical tree (union + shuffle-hash join + repartition over the
     // committed k-NN graph), so the walks' per-round plans re-analyzed
@@ -1780,7 +1782,7 @@ object Similarity {
     // geometry: layer ℓ has n/16^ℓ members — at sf0.1 layer 3 has ~5,
     // layer 2 ~78), so descending it buys nothing over simply SCORING
     // it — each skipped round is one eager barrier saved (the r19
-    // HnswProbe decomposition: at bench SFs the descent is pure stage
+    // per-job decomposition: at bench SFs the descent is pure stage
     // count). Enter instead at the DEEPEST layer whose membership is
     // enumerable (≤ [[EntryMax]]) and score ALL its members as the
     // entry beam. Recall can only improve: members of every level ≥ ℓ

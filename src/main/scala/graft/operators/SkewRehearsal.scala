@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew rehearsal at scale (VERDICT r8 item 5): `join_skew_aqe` is
@@ -31,15 +31,11 @@ object SkewRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/scale/sf1")
     val salt = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Session()
+    val cpus = spark.sparkContext.defaultParallelism
+    Seq(
       // a 100 TB fact never broadcasts; keep every variant a shuffle join
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // Cluster-realistic skew thresholds (not the sf0.1 2 KB toys),
       // scaled to the decade under test: the skew test is
       // size > max(threshold, factor × median), sized against
@@ -50,14 +46,13 @@ object SkewRehearsal {
       // without force, OptimizeSkewedJoin's extra-shuffle heuristic can
       // veto the split even when the downstream agg re-shuffles anyway —
       // the declared key (join_skew_aqe) sets the same flag
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "64MB"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "16MB"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "64MB"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "16MB")
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
 
     // the join_skew_aqe workload (Relational.joinSkewPlan), map tasks

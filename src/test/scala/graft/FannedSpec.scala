@@ -46,4 +46,21 @@ class FannedSpec extends SparkSpec {
       s"fan-out must not reach a splittable input's plan:\n${planOf(fanned)}")
     assert(fanned.count() == Tables.documents(spark, sf).count())
   }
+
+  test("the splittability probe skips `_temporary/`: row groups Spark " +
+      "never reads must not suppress the fan-out") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("fanned_tmp_spec_").toString
+    val name = "tmpfan"
+    val table = s"$tmp/$name.parquet"
+    Tables.documents(spark, sf).coalesce(1) // one file, one row group
+      .write.mode("overwrite").parquet(table)
+    // an uncommitted write's leftovers: 8 more row groups, all hidden
+    Tables.documents(spark, sf).repartition(8)
+      .write.mode("overwrite").parquet(s"$table/_temporary/0")
+    val fanned = Tables.fanned(spark, tmp, name, "doc_id")
+    assert(planOf(fanned).contains("Exchange"),
+      s"expected fan-out over the one visible row group:\n${planOf(fanned)}")
+    assert(fanned.count() == Tables.documents(spark, sf).count())
+  }
 }

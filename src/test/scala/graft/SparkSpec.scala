@@ -3,21 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ONE session builder for every test entry point (the scalatest trait
-  * below and the scalacheck Properties object). getOrCreate means the
-  * first caller's config wins for the whole JVM — a second, drifted
-  * builder would silently run with someone else's config. */
+/** ONE session for every test entry point (the scalatest trait below and
+  * the scalacheck Properties object), built by the same factory Bench
+  * and Verify use — the specs assert against the config the bench
+  * times. getOrCreate means the first caller's config wins for the JVM. */
 object TestSession {
-  def spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    // a private warehouse per test JVM; spark.* system properties reach
+    // the session the factory builds
+    System.setProperty("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    Session(cores = 4)
+  }
 }
 
 /** Shared test fixture: one session per JVM (getOrCreate), sf0.001

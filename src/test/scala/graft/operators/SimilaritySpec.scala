@@ -643,4 +643,12 @@ class SimilaritySpec extends SparkSpec {
       fp + ":changed").isEmpty,
       "a mismatched fingerprint must MISS, not serve the old artifact")
   }
+
+  test("embed_rp on an EMPTY embeddings table: 0 dims, empty result, no NPE") {
+    val dir = java.nio.file.Files.createTempDirectory("empty_emb_").toString
+    Tables.embeddings(spark, sf).limit(0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    assert(Similarity.rpDims(spark, dir) === 0L)
+    assert(Similarity.embedRp(spark, dir).collect().isEmpty)
+  }
 }
