@@ -12,7 +12,9 @@ import java.nio.file.{Files, Paths}
   *    projected expression and keeps terminal sorts, so expression suites
   *    time the declared query, not a row-count scan;
   *  - pass 1 per key is the key's OWN warm-up (cold codegen/JIT/footer);
-  *    the reported min is always a warm pass. Keys under `SlowKeySec`
+  *    the reported min is always a warm pass. Warm means JIT and
+  *    codegen, not data: every pass starts with `Caches.releaseAll()`,
+  *    so it times one full execution of the key. Keys under `SlowKeySec`
   *    (1.0 s) stop after one warm pass (they are fixed-overhead-
   *    dominated — SCALING.md "Benchmark measurement note"; their
   *    "spread" is over a single warm observation and therefore always
@@ -166,7 +168,7 @@ object Bench {
     // passes inflated, while the same keys measured first-in-run match
     // isolation. Latency-sensitive micro-batch keys get the clean
     // window; batch keys are protected by the end-of-run outlier
-    // re-measure instead. Per-key Caches.releaseAll() (see measure())
+    // re-measure instead. Per-pass Caches.releaseAll() (see timed())
     // keeps executor storage isolated in either order.
     // Optional comma-separated key filter for local A/B iteration (the
     // driver never sets it → full suite).
@@ -234,6 +236,14 @@ object Bench {
     val passMeta = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[(Double, Double, Double)]]()
     def timed(name: String): Double = {
+      // Every pass times ONE full execution from an empty block
+      // manager: releasing here, not once per key, keeps a warm pass
+      // from reading the blocks an earlier pass persisted (within one
+      // action the persisted frames still dedup the key's subtree
+      // executions). It also bounds storage to one key's working set
+      // (r13: BENCH_r12 read pipeline_corpus at 9.5 s vs 3.9 s isolated,
+      // other keys' persisted frames had filled executor storage).
+      graft.operators.Caches.releaseAll()
       val load = loadavg1()
       val tWall = (System.nanoTime() - runStart) / 1e9
       val t0 = System.nanoTime()
@@ -254,14 +264,6 @@ object Bench {
       p
     }
     def measure(name: String): (String, Seq[Double]) = {
-      // Per-key storage isolation (r13: BENCH_r12 read pipeline_corpus
-      // at 9.5 s while the isolated number was 3.9 s — the other keys'
-      // warmup-built persisted frames and checkpoint blocks had filled
-      // executor storage ahead of it). Releasing before each key bounds
-      // storage to ONE key's working set: pass 1 rebuilds the key's own
-      // caches (and IS its warm-up), later passes run warm — the
-      // reported min is the KEY's warm number, not its suite position's.
-      graft.operators.Caches.releaseAll()
       // cold + ONE warm for batch keys. A cold+2-warm variant was
       // A/B'd and REVERTED (r14): the +50% total execution volume
       // pushed full runs past this host's sustained-IO burst budget,
@@ -488,7 +490,6 @@ object Bench {
         .filter(SparkEntry.queries.contains)
         .filter(n => only.forall(_.contains(n)))
         .foreach(runOnce)
-    graft.operators.Caches.releaseAll()
     // First sweep: every key once through measure(), flushing bench.json
     // + a partial compact line after each — a driver timeout anywhere in
     // the run still leaves the completed keys' data as the last line.
@@ -577,9 +578,6 @@ object Bench {
         }
         (outliers ++ regressed).foreach { name =>
           remeasured += name
-          // same per-key storage isolation as measure(): the re-run
-          // times the key's own working set, not the previous key's
-          graft.operators.Caches.releaseAll()
           val times = scala.collection.mutable.ArrayBuffer(results(name): _*)
           times += timed(name)
           // second extra pass only if the first didn't already collapse

@@ -38,7 +38,7 @@ object Session {
       // cores/4 keeps ~all of the heavy-stage win at a quarter of the
       // overhead.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(2, cores / 4).toString)
+        Tables.spread(cores).toString)
       // Let AQE re-plan (and coalesce) shuffles above cached plans too —
       // the iterative CC loop's per-round joins read persisted frames,
       // which this conf otherwise pins at the static partition count.

@@ -79,6 +79,83 @@ object Tables {
   val lineitemKey: Seq[String] =
     Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
 
+  /** The fan-out width: a quarter of session parallelism, at least 2.
+    * Also the AQE coalescing floor (`Session`), where the cores/4
+    * calibration is measured: full-width spreads taxed the light
+    * consumers of every shared frame more than the heavy stages gained. */
+  def spread(cores: Int): Int = math.max(2, cores / 4)
+
+  /** THE LAYOUT POLICY for the single-row-group fixtures.
+    *
+    * Parquet assigns each row group to one scan task, and the driver
+    * fixtures hold one row group per table, so every scan stage runs its
+    * map-side compute on one core (optimization guide §2.5, "one huge
+    * unsplittable file"). The reference never meets this: its 5,000
+    * in-memory pages are 5,000 parallel units (TpchDataGenerator.java:
+    * 16-27). One decision, [[narrow]], says whether a table is in that
+    * regime; the operators only choose which lever to pull, and each
+    * lever is a provable no-op when the table can already split to
+    * [[spread]] scan tasks — no exchange, width or persist of this
+    * policy ever reaches a 100 TB plan (FannedSpec pins that on a
+    * multi-file layout).
+    *
+    *  - [[fanned]]: hash-spread the rows on the table's row key right
+    *    after the read, so the heavy expressions above the scan (expand,
+    *    dedup, parse_json, tokenize HOFs) run wide. A stable high-
+    *    cardinality key, not a rand-derived one: deterministic under
+    *    task retry (SPARK-38388). Filters and pruning still push through
+    *    the RepartitionByExpression to the scan.
+    *  - [[contractSort]]: the terminal contract sort. On the fixture the
+    *    post-sort stage would be sized by AQE's byte-targeted coalescer,
+    *    which lands tiny-bytes/heavy-CPU consumers on the cores/4 floor;
+    *    an explicit cores-wide range partition count bypasses the
+    *    coalescer so the consumers above the sort run machine-wide. The
+    *    total order is identical: range partitions concatenate in index
+    *    order, and every consumer (noop sink, Verify's coalesce(1)
+    *    write) preserves partition order. The range sampler executes
+    *    the child a second time per action; when the child does work
+    *    beyond Project/Filter over its scans (windows, joins,
+    *    aggregates, generators, mapPartitions) it is persisted first, so
+    *    the sample pass fills the cache and the sort reads it — one
+    *    subtree execution per action. A bare scan projection is cheaper
+    *    to re-scan than to cache (measured: url_funcs +37%, json_funcs
+    *    +29% with the persist). */
+  private def narrow(spark: SparkSession, dir: String, table: String): Boolean =
+    !splittableTo(spark, s"$dir/$table.parquet",
+      spread(spark.sparkContext.defaultParallelism))
+
+  /** The unique row key [[fanned]] spreads each table on. */
+  private val rowKey = Map(
+    "documents" -> "doc_id", "events" -> "event_id",
+    "orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
+
+  /** `table` through its plain accessor (so `events` keeps its ts
+    * normalization), hash-spread on its row key when [[narrow]]. */
+  def fanned(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val df = if (table == "events") events(spark, dir) else load(spark, dir, table)
+    if (!narrow(spark, dir, table)) df
+    else df.repartition(spread(spark.sparkContext.defaultParallelism),
+      org.apache.spark.sql.functions.col(rowKey(table)))
+  }
+
+  /** `df.orderBy(cols)`, or when `table` is [[narrow]] the same total
+    * order as a cores-wide range sort over a persisted child. */
+  def contractSort(spark: SparkSession, dir: String, table: String,
+      df: DataFrame, cols: Column*): DataFrame =
+    if (!narrow(spark, dir, table)) df.orderBy(cols: _*)
+    else {
+      import org.apache.spark.sql.catalyst.plans.logical._
+      val work = df.queryExecution.analyzed.exists {
+        case _: Project | _: Filter | _: SubqueryAlias | _: View |
+            _: LeafNode => false
+        case _ => true
+      }
+      val child =
+        if (work) graft.operators.Caches.register(df.persist()) else df
+      child.repartitionByRange(spark.sparkContext.defaultParallelism, cols: _*)
+        .sortWithinPartitions(cols: _*)
+    }
+
   /** Whether the parquet input under `path` (file or directory) can
     * split into at least `want` scan tasks — driver-side footer reads,
     * memoized per (path, want) for the JVM. Parquet assigns each row
@@ -134,75 +211,4 @@ object Tables {
         groups >= want
       } catch { case _: Exception => true } // unknown layout: assume splittable
     })
-
-  /** INPUT-SKEW fan-out (optimization guide §2.5: "one huge
-    * unsplittable file … repartition immediately after the read").
-    * The driver fixtures are ONE row group per table, so every scan
-    * stage in the suite runs its map-side compute on one core while
-    * the other cores idle. Operators whose scan stage carries heavy
-    * compute (expand/dedup, parse_json, tokenization HOFs) read
-    * through this wrapper: when the source cannot split to at least
-    * half the session parallelism, rows are hash-spread on `key` (a
-    * high-cardinality stable column — deterministic under task retry,
-    * unlike rand-derived keys, SPARK-38388) so the heavy expressions
-    * above run wide. At production scale (many files / row groups)
-    * the splittability probe says yes and this is a provable NO-OP —
-    * no extra exchange ever reaches a 100 TB plan. Filters and column
-    * pruning still push through the RepartitionByExpression to the
-    * scan, so the fanned frame prunes/pushes exactly like `load`. */
-  def fanned(spark: SparkSession, dir: String, name: String,
-      key: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = load(spark, dir, name)
-    val p = spark.sparkContext.defaultParallelism
-    // cores/4 spread, not all cores (r19, same calibration as Bench's
-    // AQE coalescing floor): full-width fanning made every downstream
-    // scan of the shared cached frames a 32-task stage, taxing the
-    // light consumers more than the heavy map stages gained.
-    val spread = math.max(2, p / 4)
-    if (splittableTo(spark, s"$dir/$name.parquet", math.max(1, spread))) df
-    else df.repartition(spread, col(key))
-  }
-
-  /** CONTRACT-SORT width for heavy consumers above a sort (r20). The
-    * sort-first pattern (narrow orderBy, interpreted parse/variant
-    * consumers projected above it) keeps the heavy chain out of the
-    * range-partitioner's sample pass — but the post-sort stage is then
-    * sized by AQE's BYTE-targeted coalescer, which lands these tiny-
-    * bytes/heavy-CPU stages on the minPartitionNum floor (cores/4)
-    * while 3/4 of the machine idles. When the backing table cannot
-    * split to the fan-out spread (the single-row-group fixture
-    * regime), the sort instead takes an EXPLICIT cores-wide range
-    * partition count — explicit counts bypass the AQE coalescer (the
-    * r19 probe-derived-beam convention) — so the consumers above run
-    * machine-wide. On splittable production layouts the probe says
-    * yes and the plain orderBy keeps AQE's byte-targeted sizing: no
-    * hard-coded width ever reaches a 100 TB plan. Total order is
-    * IDENTICAL either way: range partitions concatenate in index
-    * order, and every downstream consumer (noop sink, Verify's
-    * coalesce(1) write) preserves partition order. */
-  def wideSorted(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, cols: Column*): DataFrame = {
-    val p = spark.sparkContext.defaultParallelism
-    if (splittableTo(spark, s"$dir/$name.parquet", math.max(2, p / 4)))
-      df.orderBy(cols: _*)
-    else df.repartitionByRange(p, cols: _*).sortWithinPartitions(cols: _*)
-  }
-
-  /** [[fanned]] for the documents corpus (doc_id-keyed): the
-    * tokenize/shingle/hash pipelines run orders of magnitude more CPU
-    * per input byte than a scan, so the single-row-group fixture made
-    * them single-core. */
-  def fannedDocuments(spark: SparkSession, dir: String): DataFrame =
-    fanned(spark, dir, "documents", "doc_id")
-
-  /** [[fanned]] for the ts-normalized events frame. */
-  def fannedEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = events(spark, dir)
-    val p = spark.sparkContext.defaultParallelism
-    val spread = math.max(2, p / 4)
-    if (splittableTo(spark, s"$dir/events.parquet", math.max(1, spread))) df
-    else df.repartition(spread, col("event_id"))
-  }
 }

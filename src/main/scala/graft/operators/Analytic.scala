@@ -117,8 +117,8 @@ object Analytic {
         col("o_orderkey"), col("o_custkey"),
         round(sum(col("o_totalprice")).over(w), 4).as("running_total"),
         count(lit(1)).over(w).as("running_n"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("o_orderkey")
+      .transform(Tables.contractSort(spark, dir, "orders", _,
+        col("o_orderkey")))
   }
 
   // Q20 `win_lag_lead` — offset functions; NULL at partition edges in both
@@ -131,7 +131,6 @@ object Analytic {
         col("event_id"),
         lag(col("value"), 1).over(w).as("prev_value"),
         lead(col("value"), 1).over(w).as("next_value"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("event_id")
   }
 
@@ -144,8 +143,8 @@ object Analytic {
       .select(
         col("event_id"),
         round(avg(col("value")).over(w), 4).as("moving_avg"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("event_id")))
   }
 
   // `win_range_frames` — event-time RANGE frame (VERDICT r9 item 4):
@@ -171,8 +170,8 @@ object Analytic {
         col("user_id"), col("ts_us"), col("event_id"),
         count(lit(1)).over(w).as("n_1h"),
         round(sum(col("value")).over(w), 4).as("sum_1h"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("user_id", "ts_us", "event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("user_id"), col("ts_us"), col("event_id")))
   }
 
   // Q22 `sort_limit_topk` — global top-k. orderBy+limit plans as
@@ -428,12 +427,10 @@ object Analytic {
   // the alternative — k self-joined single-distinct aggregates —
   // scans the table k times. PlanSpec pins the Expand + no join;
   // approx sibling: agg_approx_distinct (HLL, one pass, no Expand).
-  // r19: the EXPAND ×4 + partial dedup ran single-core on the
-  // unsplittable one-row-group fixture scan (guide §2.5 input skew) —
-  // Tables.fanned spreads the rows on l_orderkey first (no-op on
-  // splittable production inputs). Isolated warm 2.11 s → 1.66 s.
+  // Read fanned: the EXPAND ×4 + partial dedup is the scan stage's
+  // compute (isolated warm 2.11 s → 1.66 s).
   def aggMultiDistinct(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanned(spark, dir, "lineitem", "l_orderkey")
+    Tables.fanned(spark, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         countDistinct(col("l_partkey")).as("nd_part"),
@@ -478,13 +475,10 @@ object Analytic {
   // sketch variant (approx_percentile) is asserted against this exact
   // result in ApproxDistinctSpec.
   def aggPercentile(spark: SparkSession, dir: String): DataFrame =
-    // fanned (r20, guide §2.5): exact percentile's map-side partial
-    // buffers EVERY value of its group — on the single-row-group
-    // fixture that buffer build ran in one task. Hash-spreading on the
-    // key parallelizes the partial build; the shuffle carries the same
-    // value multiset either way (partials concatenate). No-op on
-    // splittable production layouts.
-    Tables.fanned(spark, dir, "orders", "o_orderkey")
+    // fanned: exact percentile's map-side partial buffers EVERY value
+    // of its group; the shuffle carries the same value multiset either
+    // way (partials concatenate)
+    Tables.fanned(spark, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(
         round(expr("percentile(o_totalprice, 0.25)"), 4).as("p25"),

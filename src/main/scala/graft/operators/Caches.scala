@@ -7,13 +7,13 @@ import org.apache.spark.sql.Dataset
   * memory once a query family is done (ADVICE r4: `hashedShingles`
   * stayed resident for the whole 80+-query bench session).
   *
-  * Operators register every frame they `persist`; `graft.Bench` calls
-  * `releaseAll()` after the batch loop (before streaming latency is
-  * measured) and `graft.Verify` at shutdown. Releasing is safe at those
-  * points because every query's terminal action has already run;
-  * mid-session the caches stay shared — Spark's CacheManager dedups
-  * identical plans, so e.g. `dedup_near`/`dedup_ngram`/`graph_pagerank`
-  * reuse ONE hashed-shingle cache entry between them.
+  * Operators register every frame they `persist`; `graft.Bench` and
+  * `graft.Probe` call `releaseAll()` before every timed pass, so each
+  * pass times one full execution, and `graft.Verify` calls it at
+  * shutdown. Releasing is safe at those points because every query's
+  * terminal action has already run; within one pass the caches stay
+  * shared — Spark's CacheManager dedups identical plans, so e.g. a
+  * key's persisted frame serves both its range sampler and its sort.
   */
 object Caches {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
@@ -37,19 +37,6 @@ object Caches {
   private[graft] def register[T <: Dataset[_]](df: T): T = synchronized {
     frames += df; df
   }
-
-  /** Pre-sort persist of a narrow result frame (r20): a terminal
-    * contract sort's range sampler re-executes its whole child subtree
-    * (windows, joins, parses) a second time per action. Persisting the
-    * narrow pre-sort frame makes the sample pass fill the cache and the
-    * sort read it — one subtree execution per action. persist, not
-    * localCheckpoint: the checkpoint variant pays ~0.25 s of physical
-    * planning at CONSTRUCT (toRdd) for the same dedup (A/B'd on
-    * multimodal_decode). Registered here so the harness releases the
-    * blocks at the per-key boundary; within one action the cache holds
-    * exactly one narrow copy of the key's own result. */
-  private[graft] def presortPersist[T <: Dataset[_]](df: T): T =
-    register({ df.persist(); df })
 
   /** Queue an eager `localCheckpoint` frame that ESCAPED to a caller
     * (e.g. `join_bloom`'s result) for release at the next

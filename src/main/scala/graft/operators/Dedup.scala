@@ -122,7 +122,7 @@ object Dedup {
   // The driver data plants 25 true near-dup pairs (5-gram J ≥ 0.875)
   // with a clean gap below 0.3, so 0.8 separates cleanly.
   def dedupNgram(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs(Tables.fannedDocuments(spark, dir))
+    ngramPairs(Tables.fanned(spark, dir, "documents"))
 
   /** Exact shingle-Jaccard pairs over any (doc_id, text) frame —
     * factored out so DedupSpec can plant synthetic duplicates. */
@@ -202,7 +202,7 @@ object Dedup {
     val canon = concat(
       lower(regexp_extract(c4, "^(https?://[^/]+)", 1)),
       regexp_extract(c4, "^https?://[^/]+(.*)$", 1))
-    Tables.fannedEvents(spark, dir)
+    Tables.fanned(spark, dir, "events")
       .select(id, raw.as("raw"), canon.as("url"))
       .groupBy("url")
       .agg(count(lit(1)).as("n_raw"),
@@ -225,7 +225,7 @@ object Dedup {
   // never all-pairs); at 100 TB the candidate set would come from the
   // banded-MinHash stage instead — the verify tail is unchanged.
   def dedupContainment(spark: SparkSession, dir: String): DataFrame =
-    containmentPairs(Tables.fannedDocuments(spark, dir))
+    containmentPairs(Tables.fanned(spark, dir, "documents"))
 
   /** Containment pairs over any (doc_id, text) frame — factored out so
     * DedupSpec can plant a subset-doc pair that Jaccard misses. */
@@ -253,7 +253,7 @@ object Dedup {
   // generation never goes all-pairs. Everything is xxhash64 — seedless,
   // deterministic, no fit step, no driver state.
   def dedupNear(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(Tables.fannedDocuments(spark, dir))
+    minhashPairs(Tables.documents(spark, dir))
 
   /** Checkpointed LEAF view of [[minhashPairs]] over the corpus,
     * memoized per dir (r19, probed per job on graph_pagerank):
@@ -277,7 +277,7 @@ object Dedup {
       dir: String): DataFrame =
     pairsLeafMemo.getOrElseUpdate(dir,
       Caches.registerCheckpoint(
-        minhashPairs(Tables.fannedDocuments(spark, dir))
+        minhashPairs(Tables.fanned(spark, dir, "documents"))
           .select("doc_a", "doc_b").localCheckpoint(true)))
 
   /** Banded-MinHash near-dup pipeline over any (doc_id, text) frame:
@@ -479,7 +479,7 @@ object Dedup {
   // output bit-identical (VERDICT r6 stretch item; SCALING.md).
   def dedupSpans(spark: SparkSession, dir: String): DataFrame = {
     val k = 20
-    val spans = Tables.fannedDocuments(spark, dir)
+    val spans = Tables.fanned(spark, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("w"))
       .filter(size(col("w")) >= k)
       .select(col("doc_id"), col("w"),
@@ -583,7 +583,7 @@ object Dedup {
     // the key's declared dominant cost, paid twice. The cached frame is
     // one (doc_id, long) row per document — negligible storage at any
     // corpus scale — and the shingle scan now runs exactly once.
-    val fp = Caches.register(simhash(Tables.fannedDocuments(spark, dir))
+    val fp = Caches.register(simhash(Tables.fanned(spark, dir, "documents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val banded = fp.select(
       col("doc_id"), col("simhash"),
@@ -626,7 +626,7 @@ object Dedup {
   // exact dup is trivially also a near dup) so each column replays as
   // its own EXISTS.
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
-    incrementalFlags(Tables.fannedDocuments(spark, dir))
+    incrementalFlags(Tables.fanned(spark, dir, "documents"))
 
   /** The flag pipeline over any (doc_id, text) frame — factored out so
     * DedupSpec can plant synthetic cross-set and batch-internal

@@ -182,7 +182,6 @@ object EventAnalytics {
         col("s.event_id").as("last_event"),
         col("s.event_type").as("last_type"),
         round(col("s.value"), 4).as("last_value"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("user_id")
 
   // `agg_sketch_rollup` — mergeable-sketch distinct counting
@@ -392,8 +391,8 @@ object EventAnalytics {
           .otherwise(floor((lit(2) * num + den) / (lit(2) * den))
             .cast("long"))
           .as("value_cents"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("h", "event_type")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("h"), col("event_type")))
   }
 
   // `scd2_history` — slowly-changing-dimension TYPE 2 from a changelog
@@ -421,7 +420,6 @@ object EventAnalytics {
         coalesce(col("next_from"),
           lit("2100-01-01 00:00:00").cast("timestamp")).as("valid_to"),
         col("next_from").isNull.cast("int").as("is_current"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("user_id", "valid_from", "event_id")
   }
 
@@ -459,7 +457,6 @@ object EventAnalytics {
         min(col("ts_us")).as("start_us"),
         max(col("ts_us")).as("end_us"),
         (max(col("ts_us")) - min(col("ts_us"))).as("duration_us"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("user_id", "session_id")
   }
 
@@ -551,7 +548,6 @@ object EventAnalytics {
       .filter(col("run_len") >= 2)
       .select(col("user_id"), col("event_type"), col("first_event"),
         col("last_event"), col("run_len"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("user_id", "first_event")
   }
 
@@ -824,7 +820,6 @@ object EventAnalytics {
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .select(col("event_id"), col("user_id"),
         round((num / den), 4).as("ewma"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
       .orderBy("event_id")
   }
 
@@ -1135,8 +1130,8 @@ object EventAnalytics {
       when(col("a") > 0L && col("a") < col("n"),
         floor((col("n_runs").cast("double") - mu) / sqrt(sig2) * lit(1e6))
           .cast("long")).as("z_micro"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("user_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("user_id")))
   }
 
   // `stat_benford` — first-significant-digit distribution (Benford
@@ -1192,8 +1187,8 @@ object EventAnalytics {
         lit(25L) * col("var_sc"))
       .select(col("user_id"), col("event_id"), col("c"), col("n"),
         col("dev"), col("var_sc"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("user_id", "event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("user_id"), col("event_id")))
   }
 
   // `eval_pr_curve` — precision/recall curve at 10 threshold cuts
@@ -1458,8 +1453,8 @@ object EventAnalytics {
       .filter(col("pick") === 1 && col("n") >= 10L)
       .select(col("user_id"), col("n"), col("t").as("cp_t"),
         col("event_id").as("cp_event_id"), col("dev_scaled"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
-      .orderBy("user_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("user_id")))
   }
 
   // `event_attribution` — LAST-TOUCH marketing attribution: each
@@ -1516,10 +1511,9 @@ object EventAnalytics {
     // 0.9 s at sf0.1 (md5 was the explode's dominant cost).
     val w = pmod(conv(expr("substring(h, b + 1, 3)"), 16, 10)
       .cast("long"), lit(3L))
-    // r19: the md5 + 20x explode + window-draw chain is the scan
-    // stage's compute — fan the unsplittable fixture scan out first
-    // (guide §2.5; no-op on splittable production layouts)
-    Tables.fannedEvents(spark, dir)
+    // fanned: the md5 + 20x explode + window-draw chain is the scan
+    // stage's compute
+    Tables.fanned(spark, dir, "events")
       .filter(col("value").isNotNull)
       .select(col("event_id"),
         round(col("value") * 100).cast("long").as("c"),
@@ -1672,10 +1666,8 @@ object EventAnalytics {
     def bucket(j: Column, key: Column): Column = pmod(
       conv(substring(md5(concat(j.cast("string"), lit(":"),
         key.cast("string"))), 1, 6), 16, 10).cast("long"), lit(w))
-    // fanned (r20, guide §2.5): the sketch build runs 3 md5s per row
-    // above the unsplittable fixture scan — hash-spread so the explode
-    // + bucket chain uses the machine; no-op on splittable layouts.
-    val ev = Tables.fannedEvents(spark, dir).select(col("user_id"))
+    // fanned: the sketch build runs 3 md5s per row
+    val ev = Tables.fanned(spark, dir, "events").select(col("user_id"))
     val sketch = ev
       .select(col("user_id"), explode(sequence(lit(0), lit(d - 1))).as("j"))
       .select(col("j"), bucket(col("j"), col("user_id")).as("b"))

@@ -383,36 +383,51 @@ object Layout {
     graft.sources.FormatSources.exportPath(s"codec_$c", dir)
   def writeCodecs(spark: SparkSession, dir: String): DataFrame = {
     val slice = codecSlice(spark, dir)
-    // The three codec writes are INDEPENDENT jobs over the same slice
-    // (different output paths) — run them from a small thread pool so
-    // each job's tail back-fills the others' idle cores (optimization
-    // guide §2.6 "overlap independent jobs"); actions were only
-    // sequential because this loop called them sequentially. Wall
-    // drops from Σ(writes) to ~max(writes); failures rethrow via get().
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(WriteCodecNames.size)
+    runWrites(spark, WriteCodecNames.map { c => () =>
+      slice.write.mode("overwrite").option("compression", c)
+        .parquet(codecPath(c, dir))
+    })
+    spark.read.parquet(codecPath("zstd", dir))
+      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
+  }
+
+  /** Runs INDEPENDENT write actions from a small thread pool so each
+    * job's tail back-fills the others' idle cores (optimization guide
+    * §2.6 "overlap independent jobs"): wall drops from Σ(writes) to
+    * ~max(writes). The first failure rethrows only after every sibling
+    * has stopped. Interrupting a thread blocked in `runJob` would
+    * abandon its Spark job without cancelling it, so each write runs
+    * under one job tag instead, and the failure path cancels the tag
+    * until the pool drains: a sibling still planning when the first
+    * cancel lands submits its job afterwards. */
+  private[graft] def runWrites(spark: SparkSession,
+      writes: Seq[() => Unit]): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-writes-${java.util.UUID.randomUUID}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
     try {
-      val futures = WriteCodecNames.map { c =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            slice.write.mode("overwrite").option("compression", c)
-              .parquet(codecPath(c, dir))
+      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+      writes.foreach { w =>
+        done.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            sc.addJobTag(tag)
+            try w() finally sc.removeJobTag(tag)
+          }
         })
       }
-      try futures.foreach(_.get())
+      // in completion order: the first failure surfaces while its
+      // siblings still run, not after the writes listed before it
+      try writes.foreach(_ => done.take().get())
       catch { case e: Throwable =>
-        // ADVICE r19: shutdown() does not cancel running tasks — on one
-        // codec's failure, cancel the rest and WAIT for them, or their
-        // writes keep racing past the key's failure into the harness's
-        // next steps.
-        futures.foreach(_.cancel(true))
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        pool.shutdown()
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        do sc.cancelJobsWithTag(tag)
+        while (!pool.awaitTermination(100,
+          java.util.concurrent.TimeUnit.MILLISECONDS) &&
+          System.nanoTime() < deadline)
         throw e
       }
     } finally pool.shutdown()
-    spark.read.parquet(codecPath("zstd", dir))
-      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
   }
 
   def writePartitionOverwrite(spark: SparkSession, dir: String): DataFrame = {

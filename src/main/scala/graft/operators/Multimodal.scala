@@ -221,10 +221,6 @@ object Multimodal {
         MediaMeta(m.doc_id, fmt, w, h, d, c, m.blob.length.toLong)
       }
     }
-    // pre-sort persist (r20, Caches.presortPersist): the contract
-    // sort's range sampler otherwise re-reads every blob and re-runs
-    // the container parse; the persisted frame is the NARROW metadata
-    // (blob dropped) — one binaryFile pass per action.
-    Caches.presortPersist(decoded.toDF()).orderBy("doc_id")
+    decoded.toDF().orderBy("doc_id")
   }
 }

@@ -34,7 +34,7 @@ import graft.Tables
 object Pipeline {
 
   def pipelineCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // (r19: a fannedDocuments read was A/B'd here and REVERTED —
+    // (r19: a fanned documents read was A/B'd here and REVERTED —
     // 1.87 s control vs 2.07-2.18 s fanned in one clean window; the
     // pipeline's stages shuffle on content keys immediately, so the
     // extra exchange buys nothing the first groupBy doesn't already.)
@@ -233,10 +233,9 @@ object Pipeline {
   // Determinism: counts exact BIGINTs; min/max rendered as exact
   // integer cents (prices) or raw keys — no float surfaces.
   def dqProfile(spark: SparkSession, dir: String): DataFrame = {
-    // r19: the 3-countDistinct Expand (x4 row fan-out + partial dedup)
-    // ran single-core on the unsplittable fixture scan — fan out first
-    // (guide §2.5; no-op on splittable production layouts)
-    val o = Tables.fanned(spark, dir, "orders", "o_orderkey")
+    // fanned: the 3-countDistinct Expand (x4 row fan-out + partial
+    // dedup) is the scan stage's compute
+    val o = Tables.fanned(spark, dir, "orders")
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
     val prof = o.agg(
       count(lit(1)).as("n"),

@@ -166,7 +166,6 @@ object Relational {
         col("l_extendedprice") > col("p_retailprice") * 55.0)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_linenumber"), col("l_extendedprice"), col("p_retailprice"))
-      .transform(graft.operators.Caches.presortPersist) // r20
       .orderBy(Tables.lineitemKey.map(col): _*)
 
   // Q11 `join_asof` — as-of join: each event matched to the latest order
@@ -205,8 +204,8 @@ object Relational {
       .filter(col("kind") === 1)
       .select(col("event_id"),
         coalesce(col("matched"), lit(-1L)).as("matched_order"))
-      .transform(presortPersist) // r20: see presortPersist
-      .orderBy("event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("event_id")))
   }
 
   // `join_asof_nearest` — the bidirectional completion of the as-of
@@ -262,8 +261,8 @@ object Relational {
             .when(col("fk").isNull, distB)
             .otherwise(least(distB, distF)),
           lit(-1L)).as("dist_us"))
-      .transform(presortPersist) // r20: see presortPersist
-      .orderBy("event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("event_id")))
   }
 
   // `join_salted` — TWO-PATH hot-key salting, the production
@@ -711,7 +710,6 @@ object Relational {
       .join(dim, col("user_id") === col("d_user") &&
         col("ts") >= col("valid_from") && col("ts") < col("valid_to"))
       .select(col("user_id"), col("ts"), col("event_id"), col("status"))
-      .transform(presortPersist) // r20: see presortPersist
       .orderBy("user_id", "ts", "event_id")
   }
 
@@ -891,12 +889,9 @@ object Relational {
           when(col("next_t_us") - unix_micros(col("t")) <= tolUs,
             col("next_key")),
           lit(-1L)).as("next_order"))
-      .transform(presortPersist)
-      .orderBy("event_id")
+      .transform(Tables.contractSort(spark, dir, "events", _,
+        col("event_id")))
   }
-
-  private def presortPersist(df: DataFrame): DataFrame =
-    graft.operators.Caches.presortPersist(df)
 
   // `sql_recursive_cte` — WITH RECURSIVE (Spark 4.0's headline SQL
   // addition): iterative queries — hierarchy walks, transitive closure,

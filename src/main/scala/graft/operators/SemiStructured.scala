@@ -129,7 +129,7 @@ object SemiStructured {
     // variant_explode/json_variant lesson: get_json_object/from_json
     // are CodegenFallback, and under the sort the range-partitioner
     // sample pass evaluates them twice)
-    Tables.wideSorted(spark, dir, "events",
+    Tables.contractSort(spark, dir, "events",
       Tables.events(spark, dir)
         .select(col("event_id"), col("props")),
       col("event_id"))
@@ -166,7 +166,7 @@ object SemiStructured {
     // + five variant consumers — none codegen-able yet — executed
     // twice when they sat under the sort; a Project above Sort
     // preserves ordering, no exchange between them).
-    Tables.wideSorted(spark, dir, "events",
+    Tables.contractSort(spark, dir, "events",
       Tables.events(spark, dir)
         .select(col("event_id"), col("props"), col("event_type")),
       col("event_id"))
@@ -212,11 +212,9 @@ object SemiStructured {
   // per-row error-tolerance story as ansi_try_funcs. One parse per
   // row, explode ×3, map-only before the contract sort.
   def variantExplode(spark: SparkSession, dir: String): DataFrame = {
-    // r19: the interpreted parse chain (get_json_object → parse_json →
-    // variant_explode) below the sort ran single-core on the
-    // unsplittable fixture scan — fan the events out first (guide
-    // §2.5; no-op on splittable production inputs).
-    Tables.fannedEvents(spark, dir).createOrReplaceTempView("vex_events")
+    // fanned: the interpreted parse chain (get_json_object →
+    // parse_json → variant_explode) is the scan stage's compute
+    Tables.fanned(spark, dir, "events").createOrReplaceTempView("vex_events")
     // Three verdict fixes, all measured (sf0.1, 32 threads, best-of-3):
     //  - props parses ONCE (hoisted k projection) — VARIANT's whole
     //    point is parse-once (r12);
@@ -248,12 +246,7 @@ object SemiStructured {
         |                AS kk
         |            FROM vex_events)) e,
         |LATERAL variant_explode(e.arr) v""".stripMargin)
-    // contract sort via wideSorted (r20): the interpreted consumers
-    // above ran on the AQE byte-floor's cores/4 partitions; an explicit
-    // cores-wide range sort (fixture regime only — see Tables
-    // .wideSorted) spreads them machine-wide with the identical total
-    // order.
-    Tables.wideSorted(spark, dir, "events", exploded,
+    Tables.contractSort(spark, dir, "events", exploded,
       col("event_id"), col("pos"))
       .selectExpr("event_id", "pos",
         """CASE WHEN pos = 0 THEN CAST(kk AS STRING)
@@ -281,7 +274,7 @@ object SemiStructured {
     // json_variant lesson: the chain starts with an interpreted
     // get_json_object, and under the sort the range-partitioner
     // sample pass evaluated all of it twice)
-    Tables.wideSorted(spark, dir, "events",
+    Tables.contractSort(spark, dir, "events",
       Tables.events(spark, dir)
         .select(col("event_id"), col("props"), col("event_type")),
       col("event_id"))

@@ -486,10 +486,7 @@ object Similarity {
         "CASE WHEN instr('13579bdf', substring(md5(concat(" +
           "cast(i AS string), ':', cast(j AS string))), 1, 1)) > 0 " +
         "THEN -1L ELSE 1L END")))
-    // fanned (r20, guide §2.5): the posexplode(dim) + sign join +
-    // partial agg above the single-row-group fixture scan ran in one
-    // task; hash-spread on vec_id parallelizes it (no-op at scale).
-    Tables.fanned(spark, dir, "embeddings", "vec_id")
+    Tables.embeddings(spark, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .select(col("vec_id"), col("i"),
         expr("CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)").as("xm"))

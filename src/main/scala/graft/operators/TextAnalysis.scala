@@ -107,11 +107,7 @@ object TextAnalysis {
   // identity on corpus docs, and the id-space partition.
   def tokenBpe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // fanned (r20, guide §2.5): both the learner's word-count explode
-    // and the greedy per-doc encode (the mapPartitions below) are
-    // heavy per-row work above the unsplittable fixture scan — spread
-    // them; no-op on splittable production layouts.
-    val docs = Tables.fannedDocuments(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val (ranks, symIds) = bpeTables(docs)
     val bcRanks = spark.sparkContext.broadcast(ranks)
     val bcSyms = spark.sparkContext.broadcast(symIds)
@@ -494,7 +490,7 @@ object TextAnalysis {
   // not a grid value, so the half-boundary class that bit
   // ts_interpolate cannot arise.
   def textEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.fannedDocuments(spark, dir)
+    val counts = Tables.fanned(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
       .groupBy("doc_id", "c").agg(count(lit(1)).as("n"))
     counts
@@ -563,12 +559,10 @@ object TextAnalysis {
       col("text"), lit(" contact user"), col("doc_id"),
       lit("@example.com or +1-555-"),
       lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-    // contract sort FIRST via wideSorted (r20): the regex chain (two
-    // extract_alls + two replaces + md5) sat below the terminal sort,
-    // so the range sampler executed it twice and the scrub stage ran
-    // on the AQE byte floor; sorted-narrow-first it runs once,
-    // machine-wide (fixture regime only — see Tables.wideSorted).
-    Tables.wideSorted(spark, dir, "documents",
+    // contract sort FIRST: the regex chain (two extract_alls + two
+    // replaces + md5) below the sort ran twice, once for the range
+    // sampler; above it, it runs once.
+    Tables.contractSort(spark, dir, "documents",
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
       .select(col("doc_id"), aug.as("t"))
@@ -734,7 +728,7 @@ object TextAnalysis {
   // both content-derived keys; nothing is corpus-global except the
   // scalar N (computed as an aggregation, broadcast by the join).
   def textTfidf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.fannedDocuments(spark, dir)
+    val docs = Tables.fanned(spark, dir, "documents")
     val terms = docs.select(col("doc_id"), explode(toks).as("term"))
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -777,7 +771,7 @@ object TextAnalysis {
   // engine-order float error (~1e-13 relative) sits ~9 orders below
   // the rounding grid.
   def textPerplexity(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.fannedDocuments(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val tokStream = docs.select(col("doc_id"), explode(toks).as("tok"))
     val counts = Caches.register(
       tokStream.groupBy("tok").agg(count(lit(1)).as("cnt")).persist())
@@ -830,7 +824,7 @@ object TextAnalysis {
     // Dedup.shingleArray: a captured split(...) subtree would be
     // re-evaluated per lambda element (O(tokens²) per doc).
     val w = col("w")
-    val grams = Tables.fannedDocuments(spark, dir)
+    val grams = Tables.fanned(spark, dir, "documents")
       .select(col("doc_id"), Dedup.tokens(col("text")).as("w"))
       .select(col("doc_id"),
         explode(concat(w,
@@ -873,7 +867,7 @@ object TextAnalysis {
   // + fraction + a `contaminated` 0/1 flag at ≥ 0.5 on the rounded
   // fraction (planted near-dups crossing the eval boundary trip it).
   def decontamOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.hashedShingles(Tables.fannedDocuments(spark, dir))
+    val sh = Dedup.hashedShingles(Tables.fanned(spark, dir, "documents"))
     val eval_ = sh.filter(pmod(col("doc_id"), lit(97)) === 0)
       .select(col("h")).distinct()
     sh.filter(pmod(col("doc_id"), lit(97)) =!= 0)
@@ -1013,7 +1007,7 @@ object TextAnalysis {
   }
 
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    val sk = Dedup.shingles(Tables.fannedDocuments(spark, dir))
+    val sk = Dedup.shingles(Tables.fanned(spark, dir, "documents"))
       .select(col("doc_id"), md5(col("s")).as("h"))
       .groupBy("doc_id")
       .agg(
@@ -1121,7 +1115,7 @@ object TextAnalysis {
   def textHashingVec(spark: SparkSession, dir: String): DataFrame = {
     val bucket = pmod(
       conv(substring(md5(col("term")), 1, 6), 16, 10).cast("long"), lit(64))
-    Tables.fannedDocuments(spark, dir)
+    Tables.fanned(spark, dir, "documents")
       .select(col("doc_id"), explode(toks).as("term"))
       .select(col("doc_id"), bucket.as("b"))
       .groupBy("doc_id", "b").agg(count(lit(1)).as("n"))
@@ -1155,7 +1149,7 @@ object TextAnalysis {
     val bucket = pmod(
       conv(substring(md5(col("term")), 1, 6), 16, 10).cast("long"), lit(64))
     val w = pmod(col("b") * lit(2654435761L), lit(1001L)) - lit(500L)
-    Tables.fannedDocuments(spark, dir)
+    Tables.fanned(spark, dir, "documents")
       .select(col("doc_id"), explode(toks).as("term"))
       .select(col("doc_id"), bucket.as("b"))
       .groupBy("doc_id", "b").agg(count(lit(1)).as("n"))
@@ -1342,7 +1336,7 @@ object TextAnalysis {
     val queryTerms = Seq("dup", "vector", "hash") // df 25 / 382 / 394 of 500
     val k1 = 1.2
     val b = 0.75
-    val docs = Tables.fannedDocuments(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val terms = docs.select(col("doc_id"), explode(toks).as("term"))
     val dl = terms.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val qtf = terms.filter(col("term").isin(queryTerms: _*))

@@ -25,11 +25,11 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: => DataFrame): String = {
     // Per-pin cache isolation (r20): operators persist frames (shingle
-    // caches, presortPersist), and a cache MATERIALIZED by an earlier
-    // test renders differently (CacheManager may substitute another
-    // canonically-equal plan's cached block), making operator counts
-    // order-dependent. Releasing first pins every plan in the same
-    // fresh-cache state the bench's per-key releaseAll gives it.
+    // caches, Tables.contractSort's child), and a cache MATERIALIZED by
+    // an earlier test renders differently (CacheManager may substitute
+    // another canonically-equal plan's cached block), making operator
+    // counts order-dependent. Releasing first pins every plan in the
+    // same fresh-cache state the bench's per-pass releaseAll gives it.
     operators.Caches.releaseAll()
     withoutAQE { df.queryExecution.executedPlan.toString }
   }
@@ -172,9 +172,9 @@ class PlanSpec extends SparkSpec {
       operators.EventAnalytics.tsInterpolate(spark, sf)
         .queryExecution.executedPlan
     }
-    // unwrap the r20 presortPersist cache: the pinned computation now
-    // lives in the top cache's cachedPlan (the outer plan is just
-    // InMemoryTableScan -> Sort)
+    // unwrap Tables.contractSort's persisted child on the fixture: the
+    // pinned computation lives in the top cache's cachedPlan (the outer
+    // plan is just InMemoryTableScan -> range Exchange -> Sort)
     val exec = exec0.collectLeaves().collectFirst {
       case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
         if s.relation.cachedPlan.toString.contains("Window") =>
@@ -833,7 +833,7 @@ class PlanSpec extends SparkSpec {
     // projection must come after Sort, with no exchange between.
     val lines = p.linesIterator.toSeq
     val consumerIdx = lines.indexWhere(_.contains("try_variant_get"))
-    // r20 wideSorted: on the fixture the contract sort is a LOCAL sort
+    // Tables.contractSort: on the fixture the contract sort is a LOCAL sort
     // above an explicit range exchange (identical total order — range
     // partitions concatenate in index order); on splittable layouts it
     // stays the plain global Sort. Accept either, but a local sort must

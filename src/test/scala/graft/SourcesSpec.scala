@@ -229,6 +229,42 @@ class SourcesSpec extends SparkSpec {
     assert(reads(1) === reads(2))
   }
 
+  test("write pool: one failing write cancels its running sibling's " +
+      "Spark job before the failure rethrows") {
+    val sc = spark.sparkContext
+    // runs until its task is killed, or for 60 s without the cancel
+    val long = () => spark.range(0, 1, 1, 1).foreachPartition {
+      (_: Iterator[java.lang.Long]) =>
+        val end = System.nanoTime() + 60L * 1000000000L
+        val tc = org.apache.spark.TaskContext.get()
+        while (!tc.isInterrupted() && System.nanoTime() < end)
+          Thread.sleep(20)
+    }
+    var siblingRan = false
+    val failing = () => {
+      val end = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getActiveJobIds.isEmpty &&
+          System.nanoTime() < end) Thread.sleep(20)
+      siblingRan = sc.statusTracker.getActiveJobIds.nonEmpty
+      throw new IllegalStateException("codec write failed")
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[java.util.concurrent.ExecutionException](
+      operators.Layout.runWrites(spark, Seq(long, failing)))
+    assert(e.getCause.getMessage == "codec write failed")
+    assert(siblingRan, "the long write never started a job")
+    // job ends reach the status tracker through the listener bus, and
+    // the scheduler wakes the job's caller just before posting its end
+    val settle = System.nanoTime() + 5L * 1000000000L
+    while ({ org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+        sc.statusTracker.getActiveJobIds.nonEmpty } &&
+        System.nanoTime() < settle) Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "a sibling write's job outlived the failed call")
+    assert((System.nanoTime() - t0) / 1e9 < 30,
+      "the failure waited out the sibling instead of cancelling it")
+  }
+
   test("scan_parquet_bloom: footer carries a bloom filter on o_custkey " +
       "(the enable option silently no-ops on typos — this pins it took)") {
     import java.nio.file.{Files, Paths}
